@@ -8,15 +8,16 @@ Run from the repository root.  One run:
 1. set-up (``setup_s``): writes a seeded transcript corpus, starts the
    Spark host (``server.py``, its own process), which builds the index
    through ``docids.assign_doc_ids`` + ``IndexBuilder.build`` and serves
-   it with ``serve-http``, then (on ``search``) sends one warm-up read;
+   it with ``serve-http``, then sends warm-up reads;
 2. the timed window of S seconds: closed-loop HTTP clients in this
-   process (4 readers; on ``search_write`` 3 readers and 1 writer);
+   process (4 readers; on ``search_write`` 3 readers and 1 writer, and
+   once the writer's add is acknowledged and read back the readers read
+   ``POST_WRITE_READ_S`` more);
 3. answer checks, outside the timed window (``oracle.py``);
 4. with ``--trace 1``, the per-layer numbers from the server's spans and
    Spark's event log (``analyze.py``).
 
-Workloads: ``search`` and ``search_broad`` (the two BENCHMARK.json
-lists) and ``search_write`` (by hand; see WORKLOADS).
+Workloads: ``search`` and ``search_write`` (see WORKLOADS and README.md).
 
 The last line of stdout is the result JSON; the line before it is a
 report with the host facts, sample counts, checks and (traced) guards.
@@ -51,35 +52,36 @@ K = 10
 DRIVER_MEM = "1g"
 # workload -> (corpus turns, reader clients, every how many reads one
 # is broad, 0 for none); search_write adds one writer client.
-# BENCHMARK.json lists search and search_broad only: search_write's one
-# add (about 20 s in a fresh JVM) makes its runs too long for the
-# benchmark's time budget; run it by hand for the maintenance layer.
 WORKLOADS = {
     "search": (10_000, 4, 5),
-    "search_broad": (10_000, 4, 1),
     "search_write": (5_000, 3, 0),
 }
 ORACLE_SELECTIVE_SAMPLE = 4
 READY_TIMEOUT_S = 150
 REQUEST_TIMEOUT_S = 60
 # search_write: readers keep reading this long after the writer's last
-# acknowledged add, so reads of the new index state are measured
+# acknowledged add, so reads of the new index state are measured (each
+# reader starts at least one: the first read after an add takes longer)
 POST_WRITE_READ_S = 2.0
 
 
 class MemoryMonitor(threading.Thread):
-    """Peak resident memory of one process group (the Spark host:
-    driver, JVM, Python workers), sampled every 0.5 s.  A Python process
+    """Peak resident memory of one session (the Spark host started with
+    ``start_new_session``: driver, JVM, the PySpark daemon and the Python
+    workers it forks), sampled every 0.5 s.  Members are selected by
+    session id, not process group: the PySpark daemon moves itself and
+    its workers into a process group of their own.  A Python process
     counts its proportional set size, so pages that forked Python
     workers share with their parent count once, not once per process.
     The JVM counts its RSS: it shares next to nothing with the others,
     and computing its proportional set size walks its page tables for
     tens of milliseconds with its memory map locked."""
 
-    def __init__(self, pgid: int):
+    def __init__(self, sid: int):
         super().__init__(daemon=True)
-        self.pgid = pgid
+        self.sid = sid
         self.peak = 0
+        self.peak_members: dict[str, int] = {}
         self.stop_evt = threading.Event()
         self.page = os.sysconf("SC_PAGE_SIZE")
 
@@ -91,8 +93,9 @@ class MemoryMonitor(threading.Thread):
             try:
                 with open(f"/proc/{pid}/stat") as f:
                     stat = f.read()
+                # after the command: state, ppid, pgrp, session, ...
                 fields = stat[stat.rindex(")") + 2:].split()
-                if int(fields[2]) == self.pgid and fields[0] != "Z":
+                if int(fields[3]) == self.sid and fields[0] != "Z":
                     out.append(pid)
             except (OSError, ValueError, IndexError):
                 continue
@@ -109,18 +112,25 @@ class MemoryMonitor(threading.Thread):
                     return int(line.split()[1]) * 1024
         return 0
 
-    def sample(self) -> int:
-        total = 0
+    def sample(self) -> tuple[int, dict[str, int]]:
+        """Total bytes, and the members counted by command name."""
+        total, kinds = 0, {}
         for pid in self.members():
             try:
                 total += self.resident(pid)
+                with open(f"/proc/{pid}/cmdline") as f:
+                    argv = f.read().split("\0")
             except (OSError, ValueError, IndexError):
                 continue
-        return total
+            kind = "pyspark.daemon" if "pyspark.daemon" in argv else os.path.basename(argv[0])
+            kinds[kind] = kinds.get(kind, 0) + 1
+        return total, kinds
 
     def run(self) -> None:
         while not self.stop_evt.wait(0.5):
-            self.peak = max(self.peak, self.sample())
+            total, kinds = self.sample()
+            if total > self.peak:
+                self.peak, self.peak_members = total, kinds
 
 
 def call(port: int, method: str, path: str, body=None) -> tuple[int, dict]:
@@ -142,6 +152,21 @@ def search(port: int, query: str) -> tuple[bool, list[tuple[int, float]]]:
         return ok, [(int(r["doc_id"]), float(r["score"])) for r in rows]
     except (OSError, ValueError, KeyError, IndexError, TypeError, http.client.HTTPException):
         return False, []
+
+
+def closed_loop_rate(reads: list[dict]) -> float:
+    """Completed reads per second: each client's reads over the time it
+    spent on them, summed over clients.  A closed-loop client is always
+    waiting on its one read, so this is its throughput; unlike dividing
+    by the window, it charges no client for a read still running when
+    the window ends, nor for the time search_write's readers wait."""
+    busy: dict[int, float] = {}
+    count: dict[int, int] = {}
+    for r in reads:
+        c = r["client"]
+        busy[c] = busy.get(c, 0.0) + r["end"] - r["start"]
+        count[c] = count.get(c, 0) + 1
+    return sum(count[c] / busy[c] for c in count)
 
 
 def du(path: str) -> int:
@@ -204,7 +229,7 @@ class Server:
     def stop(self, graceful: bool) -> None:
         """Graceful (traced runs): the host stops Spark itself, which
         completes the event log, and writes its spans.  Otherwise the
-        group is killed at once: nothing it holds is needed."""
+        session is killed at once: nothing it holds is needed."""
         if graceful:
             try:
                 self.proc.stdin.write("stop\n")
@@ -212,17 +237,19 @@ class Server:
                 self.proc.wait(timeout=120)
             except (OSError, subprocess.TimeoutExpired):
                 pass
-        # the group outlives its leader while any member (JVM, Python
-        # worker) is alive: kill until none is left
+        # the session outlives its leader while any member (JVM, PySpark
+        # daemon, Python worker) is alive: kill until none is left
         deadline = time.time() + 30
         while time.time() < deadline:
-            try:
-                os.killpg(self.proc.pid, signal.SIGKILL)
-            except ProcessLookupError:
+            left = self.memory.members()
+            if not left:
                 break
+            for pid in left:
+                try:
+                    os.kill(int(pid), signal.SIGKILL)
+                except ProcessLookupError:
+                    pass
             self.proc.poll()
-            if not self.memory.members():
-                break
             time.sleep(0.1)
         self.proc.wait()
         self.memory.stop_evt.set()
@@ -252,10 +279,14 @@ def run(args) -> dict:
         t_ready = time.time()
         port = info["port"]
         index_bytes = du(os.path.join(work, "root", info["index"]))
-        # warm-up: one broad read that no client sends, so the first timed
-        # broad read does not pay for starting the scoring UDF's Python
-        # workers.  search_write measures reads from a cold handle anyway.
-        if broad_every and not search(port, workload.broad_query(random.Random(f"warm-{args.seed}")))[0]:
+        # warm-up: reads that no client sends (a selective query outside
+        # the pool and, on search, a broad one), so the first timed reads
+        # do not pay for the first payload scan or for starting the
+        # scoring UDF's Python workers
+        warm = [workload.warm_selective_query(args.seed, pool)]
+        if broad_every:
+            warm.append(workload.broad_query(random.Random(f"warm-{args.seed}")))
+        if not all(search(port, q)[0] for q in warm):
             raise RuntimeError("warm-up read failed")
         mixes = [workload.ReadMix(args.seed, c, pool, broad_every) for c in range(readers)]
         setup_s = time.time() - t_setup
@@ -263,68 +294,71 @@ def run(args) -> dict:
         reads: list[dict] = []
         adds: list[dict] = []
         lock = threading.Lock()
+        t0 = time.time()
+        t_end = t0 + args.seconds
+        # search_write: the readers read beside the writer until the end
+        # of the window, wait while its add runs on, and once the add is
+        # acknowledged and read back read POST_WRITE_READ_S more, over
+        # the new index state.  Readers contending with the whole add
+        # slow it by about half, which would make each run about 10 s
+        # longer than the benchmark's time budget allows.
+        stop_at = [float("inf") if args.workload == "search_write" else t_end]
+        written = threading.Event()
+        if args.workload != "search_write":
+            written.set()
 
-        def read_phase(until: float, writer_thread=None) -> float:
-            """Closed-loop readers until ``until``; returns the phase's
-            length (to the last read's end)."""
-            start = time.time()
+        def reader(client: int, mix: workload.ReadMix) -> None:
+            while time.time() < stop_at[0]:
+                if time.time() >= t_end and not written.is_set():
+                    written.wait()
+                    continue
+                cls, q = mix.next()
+                s = time.time()
+                ok, rows = search(port, q)
+                with lock:
+                    reads.append({"client": client, "cls": cls, "q": q, "start": s,
+                                  "end": time.time(), "ok": ok, "rows": rows})
 
-            def reader(mix: workload.ReadMix) -> None:
-                while time.time() < until:
-                    cls, q = mix.next()
-                    s = time.time()
-                    ok, rows = search(port, q)
-                    with lock:
-                        reads.append({"cls": cls, "q": q, "start": s, "end": time.time(),
-                                      "ok": ok, "rows": rows})
-
-            threads = [threading.Thread(target=reader, args=(m,)) for m in mixes]
-            for t in threads + ([writer_thread] if writer_thread else []):
-                t.start()
-            for t in threads:
-                t.join()
-            return max([r["end"] for r in reads] + [until]) - start
-
-        def writer(t_end: float) -> None:
+        def writer() -> None:
             """Closed loop; an add starts only if the previous one would
             still have finished inside the window."""
             i, last = 0, 0.0
-            while i == 0 or time.time() + last < t_end:
-                doc_id = n_turns + i
-                doc = workload.new_turn(args.seed, i, doc_id)
-                s = time.time()
-                try:
-                    status, body = call(port, "POST", f"/idx/{doc_id}", doc)
-                    acked = status == 200 and "error" not in body
-                except (OSError, ValueError, http.client.HTTPException):
-                    acked = False
-                done = time.time()
-                readback = False
-                if acked:
+            try:
+                while i == 0 or time.time() + last < t_end:
+                    doc_id = n_turns + i
+                    doc = workload.new_turn(args.seed, i, doc_id)
+                    s = time.time()
                     try:
-                        status, got = call(port, "GET", f"/idx/{doc_id}")
-                        readback = status == 200 and all(
-                            got.get(k) == doc[k] for k in ("conv_id", "text", "role")
-                        )
+                        status, body = call(port, "POST", f"/idx/{doc_id}", doc)
+                        acked = status == 200 and "error" not in body
                     except (OSError, ValueError, http.client.HTTPException):
-                        readback = False
-                with lock:
-                    adds.append({"doc_id": doc_id, "text": doc["text"], "start": s, "end": done,
-                                 "acked": acked, "readback": readback})
-                last = done - s
-                i += 1
+                        acked = False
+                    done = time.time()
+                    readback = False
+                    if acked:
+                        try:
+                            status, got = call(port, "GET", f"/idx/{doc_id}")
+                            readback = status == 200 and all(
+                                got.get(k) == doc[k] for k in ("conv_id", "text", "role")
+                            )
+                        except (OSError, ValueError, http.client.HTTPException):
+                            readback = False
+                    with lock:
+                        adds.append({"doc_id": doc_id, "text": doc["text"], "start": s, "end": done,
+                                     "acked": acked, "readback": readback})
+                    last = done - s
+                    i += 1
+            finally:
+                stop_at[0] = max(t_end, time.time() + POST_WRITE_READ_S)
+                written.set()
 
-        t0 = time.time()
-        t_end = t0 + args.seconds
+        threads = [threading.Thread(target=reader, args=(c, m)) for c, m in enumerate(mixes)]
         if args.workload == "search_write":
-            # readers beside the writer for the window; then, once the
-            # writer is done, a short read phase over the new index state
-            w = threading.Thread(target=writer, args=(t_end,))
-            read_s = read_phase(t_end, w)
-            w.join()
-            read_s += read_phase(time.time() + POST_WRITE_READ_S)
-        else:
-            read_s = read_phase(t_end)
+            threads.append(threading.Thread(target=writer))
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
         t_last = time.time()
     finally:
         server.stop(graceful=bool(args.trace))
@@ -366,7 +400,7 @@ def run(args) -> dict:
         "setup_s": {"value": setup_s, "unit": "s"},
         "build_turns_per_s": {"value": n_turns / info["build_s"], "unit": "turns/s"},
         "index_bytes_per_input_byte": {"value": index_bytes / input_bytes, "unit": "ratio"},
-        "query_qps": {"value": len(reads) / read_s, "unit": "reads/s"},
+        "query_qps": {"value": closed_loop_rate(reads), "unit": "reads/s"},
         "query_p50_ms": {"value": statistics.median(lat) if lat else 0.0, "unit": "ms"},
         "query_p95_ms": {"value": percentile(lat, 95), "unit": "ms"},
         "peak_rss_mb": {"value": server.memory.peak / 2**20, "unit": "MB"},
@@ -391,8 +425,11 @@ def run(args) -> dict:
         },
         "samples": {
             "reads": len(reads), "selective": len(reads) - len(broad), "broad": len(broad),
-            "adds_acked": len(acked), "reading_s": read_s, "window_s": t_last - t0,
+            "adds_acked": len(acked), "window_s": t_last - t0,
+            "read_ms": {c: sorted(round((r["end"] - r["start"]) * 1000.0) for r in reads if r["cls"] == c)
+                        for c in ("selective", "broad")},
         },
+        "peak_rss_processes": server.memory.peak_members,
         "broad_p50_ms": {"value": statistics.median(broad) if broad else 0.0, "unit": "ms",
                          "samples": len(broad)},
         "write_p50_ms": {"value": statistics.median(writes) if writes else 0.0, "unit": "ms",

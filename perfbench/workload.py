@@ -105,6 +105,17 @@ def selective_pool(seed: int, size: int) -> list[str]:
     return pool
 
 
+def warm_selective_query(seed: int, pool: list[str]) -> str:
+    """A selective query drawn like the pool's but not in it, for the
+    untimed warm-up read: it leaves the pool's result-memo entries cold."""
+    taken = set(pool)
+    rng = random.Random(f"warm-selective-{seed}")
+    while True:
+        q = " ".join(dict.fromkeys(f"tok{int(zipf_rank(rng.random()))}" for _ in range(2)))
+        if q not in taken:
+            return q
+
+
 def broad_query(rng: random.Random) -> str:
     """Many frequent terms in a random order: a fresh result-memo key
     every time, over terms whose metadata the server has seen."""
