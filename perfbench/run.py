@@ -9,10 +9,12 @@ Run from the repository root.  One run:
    Spark host (``server.py``, its own process), which builds the index
    through ``docids.assign_doc_ids`` + ``IndexBuilder.build`` and serves
    it with ``serve-http``, then sends warm-up reads;
-2. the timed window of S seconds: closed-loop HTTP clients in this
-   process (4 readers; on ``search_write`` 3 readers and 1 writer, and
-   once the writer's add is acknowledged and read back the readers read
-   ``POST_WRITE_READ_S`` more);
+2. the timed window, in rounds until it has lasted S seconds:
+   closed-loop HTTP clients in this process, each reader sending a
+   fixed number of reads per round (4 readers; on ``search_write`` 3
+   readers and 1 writer that makes one add per round, with the readers'
+   first read of the round beside it and the rest after it is
+   acknowledged and read back);
 3. answer checks, outside the timed window (``oracle.py``);
 4. with ``--trace 1``, the per-layer numbers from the server's spans and
    Spark's event log (``analyze.py``).
@@ -51,18 +53,19 @@ POOL = 500
 K = 10
 DRIVER_MEM = "1g"
 # workload -> (corpus turns, reader clients, every how many reads one
-# is broad, 0 for none); search_write adds one writer client.
+# is broad (0: none), reads each reader sends per round, how many of
+# them go out as the round's add starts); search_write adds one writer
+# client.  A fixed number of reads per client and round, instead of
+# reading until a deadline, keeps the mix of fast and slow reads in a
+# run the same from run to run.
 WORKLOADS = {
-    "search": (10_000, 4, 5),
-    "search_write": (5_000, 3, 0),
+    "search": (10_000, 4, 5, 3, 0),
+    "search_write": (5_000, 3, 0, 5, 1),
 }
+WARM_READS = 2
 ORACLE_SELECTIVE_SAMPLE = 4
 READY_TIMEOUT_S = 150
 REQUEST_TIMEOUT_S = 60
-# search_write: readers keep reading this long after the writer's last
-# acknowledged add, so reads of the new index state are measured (each
-# reader starts at least one: the first read after an add takes longer)
-POST_WRITE_READ_S = 2.0
 
 
 class MemoryMonitor(threading.Thread):
@@ -158,8 +161,8 @@ def closed_loop_rate(reads: list[dict]) -> float:
     """Completed reads per second: each client's reads over the time it
     spent on them, summed over clients.  A closed-loop client is always
     waiting on its one read, so this is its throughput; unlike dividing
-    by the window, it charges no client for a read still running when
-    the window ends, nor for the time search_write's readers wait."""
+    by the window, it charges no client for waiting on the others at the
+    end of a round, nor for search_write's readers waiting on the add."""
     busy: dict[int, float] = {}
     count: dict[int, int] = {}
     for r in reads:
@@ -264,7 +267,8 @@ def run(args) -> dict:
     for d in ("tmp", "corpus"):
         os.makedirs(os.path.join(work, d))
     corpus = os.path.join(work, "corpus")
-    n_turns, readers, broad_every = WORKLOADS[args.workload]
+    n_turns, readers, broad_every, per_round, beside = WORKLOADS[args.workload]
+    writing = args.workload == "search_write"
     pool = workload.selective_pool(args.seed, POOL)
     classes: dict[str, str] = {q: "selective" for q in pool}
 
@@ -279,16 +283,29 @@ def run(args) -> dict:
         t_ready = time.time()
         port = info["port"]
         index_bytes = du(os.path.join(work, "root", info["index"]))
-        # warm-up: reads that no client sends (a selective query outside
-        # the pool and, on search, a broad one), so the first timed reads
-        # do not pay for the first payload scan or for starting the
-        # scoring UDF's Python workers
-        warm = [workload.warm_selective_query(args.seed, pool)]
+        # warm-up: reads that no client sends, WARM_READS per reader from
+        # as many concurrent clients (selective queries outside the pool)
+        # and, on search, one broad read beside them, so the timed reads
+        # do not pay for the first payload scans, the fresh JVM's first
+        # compilations of the read path or starting the scoring UDF's
+        # Python workers
+        warm = workload.warm_selective_queries(args.seed, pool, readers * WARM_READS)
+        lanes = [warm[c::readers] for c in range(readers)]
         if broad_every:
-            warm.append(workload.broad_query(random.Random(f"warm-{args.seed}")))
-        if not all(search(port, q)[0] for q in warm):
+            lanes.append([workload.broad_query(random.Random(f"warm-{args.seed}"))])
+        warm_ok: list[bool] = []
+
+        def warm_lane(qs: list[str]) -> None:
+            warm_ok.extend(search(port, q)[0] for q in qs)
+
+        lane_threads = [threading.Thread(target=warm_lane, args=(qs,)) for qs in lanes]
+        for t in lane_threads:
+            t.start()
+        for t in lane_threads:
+            t.join()
+        if not all(warm_ok) or len(warm_ok) != sum(map(len, lanes)):
             raise RuntimeError("warm-up read failed")
-        mixes = [workload.ReadMix(args.seed, c, pool, broad_every) for c in range(readers)]
+        mix = workload.ReadMix(args.seed, readers, pool, broad_every)
         setup_s = time.time() - t_setup
 
         reads: list[dict] = []
@@ -296,35 +313,54 @@ def run(args) -> dict:
         lock = threading.Lock()
         t0 = time.time()
         t_end = t0 + args.seconds
-        # search_write: the readers read beside the writer until the end
-        # of the window, wait while its add runs on, and once the add is
-        # acknowledged and read back read POST_WRITE_READ_S more, over
-        # the new index state.  Readers contending with the whole add
-        # slow it by about half, which would make each run about 10 s
-        # longer than the benchmark's time budget allows.
-        stop_at = [float("inf") if args.workload == "search_write" else t_end]
-        written = threading.Event()
-        if args.workload != "search_write":
-            written.set()
+        # Rounds: each reader sends per_round reads, and on search_write
+        # the writer makes one add.  A reader's first `beside` reads go
+        # out as the add starts and run beside it; the rest wait for the
+        # add to be acknowledged and read back, and read the new index
+        # state.  (Readers contending with the whole add slow it by about
+        # half, which the benchmark's time budget has no room for.)  A
+        # new round starts while the window is shorter than --seconds.
+        added = threading.Event()
+        if not writing:
+            added.set()
+        more = [True]
 
-        def reader(client: int, mix: workload.ReadMix) -> None:
-            while time.time() < stop_at[0]:
-                if time.time() >= t_end and not written.is_set():
-                    written.wait()
-                    continue
-                cls, q = mix.next()
-                s = time.time()
-                ok, rows = search(port, q)
-                with lock:
-                    reads.append({"client": client, "cls": cls, "q": q, "start": s,
-                                  "end": time.time(), "ok": ok, "rows": rows})
+        def end_round() -> None:
+            more[0] = time.time() < t_end
+            if writing:
+                added.clear()
+
+        rounds = threading.Barrier(readers + writing, action=end_round)
+
+        def next_round() -> bool:
+            try:
+                rounds.wait()
+            except threading.BrokenBarrierError:
+                return False
+            return more[0]
+
+        def reader(client: int) -> None:
+            try:
+                while True:
+                    for j in range(per_round):
+                        if j == beside:
+                            added.wait()
+                        cls, q = mix.next(client)
+                        s = time.time()
+                        ok, rows = search(port, q)
+                        with lock:
+                            reads.append({"client": client, "cls": cls, "q": q, "start": s,
+                                          "end": time.time(), "ok": ok, "rows": rows})
+                    if not next_round():
+                        return
+            except BaseException:
+                rounds.abort()
+                raise
 
         def writer() -> None:
-            """Closed loop; an add starts only if the previous one would
-            still have finished inside the window."""
-            i, last = 0, 0.0
+            i = 0
             try:
-                while i == 0 or time.time() + last < t_end:
+                while True:
                     doc_id = n_turns + i
                     doc = workload.new_turn(args.seed, i, doc_id)
                     s = time.time()
@@ -346,19 +382,24 @@ def run(args) -> dict:
                     with lock:
                         adds.append({"doc_id": doc_id, "text": doc["text"], "start": s, "end": done,
                                      "acked": acked, "readback": readback})
-                    last = done - s
+                    added.set()
                     i += 1
-            finally:
-                stop_at[0] = max(t_end, time.time() + POST_WRITE_READ_S)
-                written.set()
+                    if not next_round():
+                        return
+            except BaseException:
+                added.set()
+                rounds.abort()
+                raise
 
-        threads = [threading.Thread(target=reader, args=(c, m)) for c, m in enumerate(mixes)]
-        if args.workload == "search_write":
+        threads = [threading.Thread(target=reader, args=(c,)) for c in range(readers)]
+        if writing:
             threads.append(threading.Thread(target=writer))
         for t in threads:
             t.start()
         for t in threads:
             t.join()
+        if rounds.broken:
+            raise RuntimeError("a client of the timed window failed")
         t_last = time.time()
     finally:
         server.stop(graceful=bool(args.trace))
@@ -420,12 +461,14 @@ def run(args) -> dict:
         "settings": {
             "n_turns": n_turns, "span": info["span"],
             "local_score_max_postings": info["local_score_max_postings"],
-            "readers": readers, "writer": args.workload == "search_write",
-            "broad_every": broad_every, "pool": POOL, "k": K,
+            "readers": readers, "writer": writing, "broad_every": broad_every,
+            "reads_per_round": per_round, "reads_beside_add": beside if writing else 0,
+            "warm_reads_per_reader": WARM_READS, "pool": POOL, "k": K,
         },
         "samples": {
             "reads": len(reads), "selective": len(reads) - len(broad), "broad": len(broad),
-            "adds_acked": len(acked), "window_s": t_last - t0,
+            "adds_acked": len(acked), "rounds": len(reads) // (readers * per_round),
+            "window_s": t_last - t0,
             "read_ms": {c: sorted(round((r["end"] - r["start"]) * 1000.0) for r in reads if r["cls"] == c)
                         for c in ("selective", "broad")},
         },

@@ -17,6 +17,7 @@ from __future__ import annotations
 import bisect
 import math
 import random
+import threading
 from datetime import datetime, timezone
 
 import numpy as np
@@ -105,15 +106,19 @@ def selective_pool(seed: int, size: int) -> list[str]:
     return pool
 
 
-def warm_selective_query(seed: int, pool: list[str]) -> str:
-    """A selective query drawn like the pool's but not in it, for the
-    untimed warm-up read: it leaves the pool's result-memo entries cold."""
+def warm_selective_queries(seed: int, pool: list[str], n: int) -> list[str]:
+    """n distinct selective queries drawn like the pool's but not in it,
+    for the untimed warm-up reads: they leave the pool's result-memo
+    entries cold."""
     taken = set(pool)
     rng = random.Random(f"warm-selective-{seed}")
-    while True:
+    out: list[str] = []
+    while len(out) < n:
         q = " ".join(dict.fromkeys(f"tok{int(zipf_rank(rng.random()))}" for _ in range(2)))
         if q not in taken:
-            return q
+            taken.add(q)
+            out.append(q)
+    return out
 
 
 def broad_query(rng: random.Random) -> str:
@@ -126,35 +131,40 @@ def broad_query(rng: random.Random) -> str:
 
 
 class ReadMix:
-    """One client's seeded request stream: every ``broad_every``-th read
-    is broad (0: none), the rest come from the selective pool with
-    Zipfian popularity (pool entry i has weight 1/(i+1)), so the popular
-    entries repeat and hit the server's result memo.  Popularity is
-    sampled with a golden-ratio sequence from a seeded start rather than
-    independent draws, so even a short run sees close to the Zipfian
-    share of repeats.  Clients start at different points of both cycles."""
+    """The clients' seeded request streams.  Every ``broad_every``-th
+    read of each client is broad (0: none); the others come from the
+    selective pool with Zipfian popularity (pool entry i has weight
+    1/(i+1)), so the popular entries repeat and hit the server's result
+    memo.  Popularity is sampled with one golden-ratio sequence from a
+    seeded start, shared by all clients, rather than independent draws:
+    any run of consecutive draws holds close to the Zipfian share of
+    each entry, so the number of repeats in a round varies little from
+    seed to seed.  Clients start at different points of the broad cycle.
+    Thread-safe."""
 
     GOLDEN = (math.sqrt(5) - 1) / 2
 
-    def __init__(self, seed: int, client: int, pool: list[str], broad_every: int):
-        self.rng = random.Random(f"client-{seed}-{client}")
-        self.u = self.rng.random()
+    def __init__(self, seed: int, clients: int, pool: list[str], broad_every: int):
+        self.rngs = [random.Random(f"client-{seed}-{c}") for c in range(clients)]
+        self.u = random.Random(f"mix-{seed}").random()
         self.pool = pool
         self.broad_every = broad_every
-        self.n = client
+        self.n = list(range(clients))
         cum, acc = [], 0.0
         for i in range(len(pool)):
             acc += 1.0 / (i + 1)
             cum.append(acc)
         self.cum = cum
+        self.lock = threading.Lock()
 
-    def next(self) -> tuple[str, str]:
-        self.n += 1
-        if self.broad_every and self.n % self.broad_every == 0:
-            return "broad", broad_query(self.rng)
-        self.u = (self.u + self.GOLDEN) % 1.0
-        i = bisect.bisect_right(self.cum, self.u * self.cum[-1])
-        return "selective", self.pool[min(i, len(self.pool) - 1)]
+    def next(self, client: int) -> tuple[str, str]:
+        with self.lock:
+            self.n[client] += 1
+            if self.broad_every and self.n[client] % self.broad_every == 0:
+                return "broad", broad_query(self.rngs[client])
+            self.u = (self.u + self.GOLDEN) % 1.0
+            i = bisect.bisect_right(self.cum, self.u * self.cum[-1])
+            return "selective", self.pool[min(i, len(self.pool) - 1)]
 
 
 def new_turn(seed: int, i: int, doc_id: int) -> dict:
